@@ -12,17 +12,21 @@ value-exact.
 Scale shape: each round is one join edges⋈labels + one min-aggregation
 — all key-partitioned shuffles, no driver data; rounds needed = graph
 diameter (near-dup components are overwhelmingly tiny cliques, so 2–3
-rounds in practice; the loop caps at ``max_iters`` and checks
-convergence with a single scalar aggregate per round). For planet-scale
-graphs swap the loop body for the large-star/small-star variant — same
-interface.
+rounds in practice; the loop caps at ``max_iters``). Every loop in this
+module stages each generation (``stage.stage_frame``), so round k's plan
+never re-derives rounds 1..k-1, and releases a superseded generation
+once the next one has materialized. The CC, two-star and label
+propagation convergence tests read scalars that the staging job itself
+observed (``stage.stage_observed``), so those rounds run no separate
+count/collect job. For planet-scale graphs swap the CC loop body for the
+large-star/small-star variant — same interface.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
-from ..stage import stage_frame
+from ..stage import release, stage_frame, stage_observed
 
 
 def connected_components(
@@ -34,88 +38,98 @@ def connected_components(
 
     ``vertices``: one column ``doc_id`` (singletons allowed — they come
     out as their own cluster). ``edges``: columns ``doc_a``/``doc_b``.
+
+    Runs only staging jobs: the undirected edge list (carrying the
+    round-1 labels) and every later label generation are staged, and
+    the edge count and per-round convergence sum are observed by those
+    same jobs. The result joins ``vertices`` with the final staged
+    generation, so it is as cheap to re-read as its two inputs.
     """
-    # ADVICE r16: initialization is fused into propagation round 1, so
-    # max_iters <= 0 would still run one round instead of returning
-    # identity labels — refuse the degenerate value rather than change
-    # semantics silently.
+    # Round 1 is fused into the edge staging, so max_iters <= 0 would
+    # still run one round instead of returning identity labels — refuse
+    # the degenerate value rather than change semantics silently.
     if max_iters < 1:
         raise ValueError(f"max_iters must be >= 1, got {max_iters}")
-    # undirected: propagate both ways. Persist — the edge list joins
-    # against labels EVERY round; without it each iteration recomputes
-    # the (expensive) upstream pair-finding lineage from scratch.
-    fwd = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    both_cached = fwd.unionByName(
-        edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    ).persist()
+    # The loop runs ONLY over vertices that have at least one edge. A
+    # singleton never receives a message and never emits one, so its
+    # label is constant (= its own id) through every round; singletons
+    # are labeled by one left join AFTER the fixpoint. Exact: untouched
+    # vertices cannot influence any touched vertex (messages flow only
+    # along edges) and come out as their own cluster either way.
+    #
+    # Undirected: each edge row emits both directions (one pass over
+    # ``edges``; a union of two projections would plan the upstream
+    # pair-finding lineage twice), so every touched vertex v is the src
+    # of deg(v) rows and the dst of deg(v) rows. Each row also carries
+    # its src's round-1 label, min(src, min neighbor of src), from a
+    # src-keyed window. Staged — the edge list joins against labels
+    # every later round; without it each round recomputes the
+    # pair-finding lineage from scratch.
+    both_staged, seen = stage_observed(
+        edges.select(
+            F.inline(
+                F.array(
+                    F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                    F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+                )
+            )
+        ).withColumn(
+            "cluster_id", F.least("src", F.min("dst").over(Window.partitionBy("src")))
+        ),
+        F.count(F.lit(1)).alias("n"),
+        F.sum("cluster_id").alias("w"),
+    )
     # Right-size the loop frames: the near-dup edge list is usually far
     # smaller than the corpus, and per-round task overhead at the
     # session's full shuffle width dominates the tiny joins (AQE cannot
-    # coalesce under the persisted frames here). ~100k edges per
+    # coalesce under the staged frames here). ~100k edges per
     # partition, never above the session's shuffle width — so a truly
-    # large graph keeps full parallelism. The count also materializes
-    # the persist, so round 1 never recomputes the edge lineage.
+    # large graph keeps full parallelism.
     spark = vertices.sparkSession
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    parts = max(1, min(width, both_cached.count() // 100_000 + 1))
-    both = both_cached.coalesce(parts)
-    # r16: iterate ONLY over vertices that have at least one edge. A
-    # singleton never receives a message and never emits one, so its
-    # label is constant (= its own id) through every round — carrying
-    # it through the loop shuffles |V| rows per round for nothing.
-    # Near-dup edge sets are usually tiny relative to the corpus, so
-    # the loop frames shrink from |V| to |touched|; singletons are
-    # labeled by one left join AFTER the fixpoint. Exact equivalence:
-    # untouched vertices cannot influence any touched vertex (messages
-    # flow only along edges) and come out as their own cluster either
-    # way. Initialization is FUSED with propagation round 1: after one
-    # round a touched vertex's label is min(itself, min neighbor id),
-    # which is one dst-keyed aggregation over the undirected edge list
-    # — no separate touched-distinct exchange, no identity-label init
-    # frame, no round-1 union+groupBy pass.
-    labels = (
-        both.groupBy(F.col("dst").alias("doc_id"))
-        .agg(F.min("src").alias("_mn"))
-        .select("doc_id", F.least(F.col("doc_id"), F.col("_mn")).alias("cluster_id"))
-        .coalesce(parts)
-        .persist()
-    )
-    # convergence probe: the label sum strictly decreases until the
-    # fixpoint (min-propagation is monotone) — one scalar per round,
-    # and persisting each generation keeps the lineage flat so round k
-    # never recomputes rounds 1..k-1. (On an empty edge set the sum is
-    # NULL both rounds, which terminates the loop on round 1 — right.)
-    old_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-    for _ in range(max_iters - 1):  # round 1 is the fused init above
-        msgs = (
-            both.join(labels, both.src == labels.doc_id)
-            .select(F.col("dst").alias("doc_id"), "cluster_id")
+    parts = max(1, min(width, seen["n"] // 100_000 + 1))
+    both = both_staged.coalesce(parts)
+    # Round k labels v with the min id within distance k of v. For
+    # k >= 1 the (k+1)-ball of v is the union of its neighbors' k-balls
+    # (v lies in each neighbor's 1-ball), so round k+1 is just the min
+    # over v's in-edges of the src's round-k label: one dst-keyed
+    # aggregation of (src label, dst) rows, no union with v's own label.
+    #
+    # Convergence: labels only decrease, so W = sum over vertices of
+    # deg(v) * label(v) — the sum of the src labels over all edge rows,
+    # and of cluster_id * deg over a generation — strictly decreases
+    # until the fixpoint; equal W means no label moved. On an empty
+    # edge set W is NULL both times, which ends the loop after round 2.
+    old_w = seen["w"]
+    msgs, labels = both, None
+    for _ in range(max_iters - 1):  # round 1 rides on the edge staging
+        new_labels, seen = stage_observed(
+            msgs.groupBy(F.col("dst").alias("doc_id")).agg(
+                F.min("cluster_id").alias("cluster_id"), F.count(F.lit(1)).alias("deg")
+            ),
+            F.sum(F.col("cluster_id") * F.col("deg")).alias("w"),
         )
-        new_labels = (
-            labels.unionByName(msgs)
-            .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .persist()
-        )
-        new_sum = new_labels.agg(F.sum("cluster_id")).collect()[0][0]
-        labels.unpersist()
+        if labels is not None:
+            release(labels)
         labels = new_labels
-        if new_sum == old_sum:
+        if seen["w"] == old_w:
             break
-        old_sum = new_sum
-    both_cached.unpersist()
+        old_w = seen["w"]
+        msgs = both.drop("cluster_id").join(
+            labels.select(F.col("doc_id").alias("src"), "cluster_id"), "src"
+        )
+    if labels is None:  # max_iters == 1: the round-1 label of each src
+        labels = both.groupBy(F.col("src").alias("doc_id")).agg(
+            F.min("cluster_id").alias("cluster_id")
+        )
+    else:
+        release(both_staged)
     # Singletons label themselves; touched vertices take the loop
-    # fixpoint. Hand back a lineage-free copy and release the loop
-    # cache — the persisted generations would otherwise pin executor
-    # storage for the life of the session (localCheckpoint blocks are
-    # freed by GC).
-    out = (
+    # fixpoint.
+    return (
         vertices.join(labels.withColumnRenamed("cluster_id", "_cc"), "doc_id", "left")
         .select("doc_id", F.coalesce("_cc", F.col("doc_id")).alias("cluster_id"))
-        .transform(stage_frame)
     )
-    labels.unpersist()
-    return out
 
 
 def connected_components_twostar(
@@ -144,18 +158,20 @@ def connected_components_twostar(
     # references the previous edge set several times (union with its
     # swap, plus the min side), so the LOGICAL plan doubles per round —
     # persist caches data but still canonicalizes the full lineage,
-    # which stack-overflows Catalyst after ~8 rounds. Checkpointing
-    # truncates the plan to the materialized blocks.
-    e = (
+    # which stack-overflows Catalyst after ~8 rounds. Staging
+    # truncates the plan to the materialized frame.
+    #
+    # Convergence state = (edge count, sum of u+v), observed by each
+    # generation's staging job: a round that leaves the edge set
+    # unchanged leaves both unchanged.
+    probe = (F.count(F.lit(1)).alias("n"), F.sum(F.col("u") + F.col("v")).alias("s"))
+    e, seen = stage_observed(
         edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .transform(stage_frame)
+        .distinct(),
+        *probe,
     )
-    probe = e.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.col("u") + F.col("v")).alias("s")
-    ).collect()[0]
-    state = (probe["n"], probe["s"])
+    state = (seen["n"], seen["s"])
     for _ in range(max_iters):
         # large-star: under each u, all neighbors (both directions);
         # larger neighbors re-attach to m = min(neighborhood ∪ {u})
@@ -179,21 +195,19 @@ def connected_components_twostar(
         )
         sm = nbr2.filter(F.col("v") < F.col("u"))
         m2 = sm.groupBy("u").agg(F.min("v").alias("mv"))
-        new_e = (
+        new_e, seen = stage_observed(
             sm.join(m2, "u")
             .select(F.col("v").alias("u"), F.col("mv").alias("v"))
             .unionByName(m2.select("u", F.col("mv").alias("v")))
             .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .transform(stage_frame)
+            .distinct(),
+            *probe,
         )
-        probe = new_e.agg(
-            F.count(F.lit(1)).alias("n"), F.sum(F.col("u") + F.col("v")).alias("s")
-        ).collect()[0]
+        release(e)
         e = new_e
-        if (probe["n"], probe["s"]) == state:
+        if (seen["n"], seen["s"]) == state:
             break
-        state = (probe["n"], probe["s"])
+        state = (seen["n"], seen["s"])
     # fixpoint edge set is a union of stars rooted at component minima:
     # every vertex's label = min(itself, its min neighbor)
     min_nbr = (
@@ -207,8 +221,10 @@ def connected_components_twostar(
             "doc_id",
             F.least(F.col("doc_id"), F.coalesce("mv", F.col("doc_id"))).alias("cluster_id"),
         )
+        .transform(stage_frame)
     )
-    return labels.transform(stage_frame)
+    release(e)
+    return labels
 
 
 def pagerank_fixed_point(
@@ -243,18 +259,18 @@ def pagerank_fixed_point(
     sum — the same key-partitioned shuffle pair any iterative graph
     algorithm pays, no driver data, no collect.
 
-    ``until_stable=True`` (VERDICT r7 item 9) is the production mode:
-    iterate until ``max |Δrank| <= tol_units`` or ``max_iters``. The
-    probe is one integer scalar per round (``max(abs(new - old))`` via
-    an id-keyed self-join of two consecutive generations — exact, not
-    a sampled heuristic; the same bounded-scalar-collect budget as the
-    connected-components convergence probe). The stop rule is a
+    ``until_stable=True`` is the production mode: iterate until
+    ``max |Δrank| <= tol_units`` or ``max_iters``. The probe is one
+    exact integer scalar per round, ``max(abs(new - old))`` over an
+    id-keyed join of two consecutive generations, read by one collect
+    per round (not a sampled heuristic). The stop rule is a
     TOLERANCE, not exact equality, because integer floor noise makes
     cyclic graphs oscillate by O(10^5) units forever — default
     ``tol_units=10^6`` is a 10^-3 rank tolerance at the default scale,
-    reached in ~43 rounds on a 2-cycle. Per-generation ranks are
-    checkpointed in this mode (each generation is referenced twice:
-    next round + the probe), keeping the plan linear. The registered
+    reached in ~43 rounds on a 2-cycle. Each generation is staged in
+    this mode (it is read twice: by the next round and by the probe),
+    keeping the plan linear, and released once the probe has compared
+    it with its successor. The registered
     oracle queries keep the fixed-``iters`` form — the iteration count
     of a converged run is data-dependent, which a static SQL oracle
     can't replay.
@@ -324,6 +340,7 @@ def pagerank_fixed_point(
                     .collect()[0]["d"]
                 )
                 nonrecv_delta = 0
+                release(ranks)
             delta = max(
                 [d for d in (recv_delta, nonrecv_delta) if d is not None],
                 default=None,
@@ -358,21 +375,22 @@ def label_propagation_fixed(
     read the PREVIOUS round's labels), each vertex adopting the most
     frequent label among its undirected neighbors with ties broken to
     the SMALLEST label (in-row mode over the sorted neighbor-label
-    list — see the r16 note at ``step``), isolated vertices keeping
+    list — see the note above ``step``), isolated vertices keeping
     their label. Fixed ``iters`` keeps the plan static; per round one
     edges⋈labels equi-join + ONE dst-keyed aggregation —
-    key-partitioned shuffles only. The undirected edge
-    list materializes once (localCheckpoint — the parquet-staging
-    point of a cluster run, as in :func:`pagerank_fixed_point`).
+    key-partitioned shuffles only. The undirected edge list is staged
+    once and every label generation is staged, so the plan stays
+    linear; a superseded generation is released once its successor
+    has materialized.
 
-    ``until_stable=True`` (VERDICT r7 item 9) iterates until NO vertex
-    changes label (labels are discrete, so exact stability is the
-    right stop — unlike the PageRank tolerance) or ``max_iters``
-    (synchronous LPA can 2-cycle on bipartite structures; the cap is
-    the standard guard). Probe = one integer scalar per round (count
-    of changed vertices over the already-checkpointed generations).
-    Registered oracles keep the fixed-``iters`` form — a converged
-    run's round count is data-dependent, not SQL-replayable.
+    ``until_stable=True`` iterates until NO vertex changes label
+    (labels are discrete, so exact stability is the right stop — unlike
+    the PageRank tolerance) or ``max_iters`` (synchronous LPA can 2-cycle
+    on bipartite structures; the cap is the standard guard). The count
+    of changed vertices is observed by the job that stages each
+    generation, so convergence costs no extra job. Registered oracles
+    keep the fixed-``iters`` form — a converged run's round count is
+    data-dependent, not SQL-replayable.
     """
     und = (
         edges.select("src", "dst")
@@ -381,17 +399,13 @@ def label_propagation_fixed(
         .transform(stage_frame)
     )
     labels = vertices.select("id", F.col("id").alias("lbl"))
-    if until_stable:
-        labels = labels.transform(stage_frame)
 
-    # r16: ONE dst-keyed aggregation per round instead of two. The
-    # winning label is the mode of the neighbor multiset (tie → the
-    # SMALLEST label); the (dst, nlbl)-count + per-dst max-struct pair
-    # paid two exchanges per round for it. collect_list per dst is
-    # bounded by vertex degree (k-NN graphs: ~2k labels), and the mode
-    # is one aggregate() walk over the SORTED list — the strict '>'
-    # keeps the FIRST longest run, which in ascending order is exactly
-    # the smallest label among tied counts, so the result is
+    # ONE dst-keyed aggregation per round. The winning label is the mode
+    # of the neighbor multiset (tie → the SMALLEST label). collect_list
+    # per dst is bounded by vertex degree (k-NN graphs: ~2k labels), and
+    # the mode is one aggregate() walk over the SORTED list — the strict
+    # '>' keeps the FIRST longest run, which in ascending order is
+    # exactly the smallest label among tied counts, so the result is
     # bit-identical to the max(struct(n, -label)) idiom (verified
     # frame-equal on the fixtures). Integer-exact throughout.
     _mode_expr = (
@@ -403,7 +417,8 @@ def label_propagation_fixed(
         "'m', IF(IF(x <=> a.p, a.r + 1, 1) > a.b, x, a.m)), a -> a.m)"
     )
 
-    def step(prev: DataFrame) -> DataFrame:
+    def step(prev: DataFrame) -> tuple[DataFrame, int]:
+        """Next staged generation and how many labels it changed."""
         win = (
             und.join(prev.withColumnRenamed("id", "src").withColumnRenamed("lbl", "nlbl"), "src")
             .groupBy("dst")
@@ -411,32 +426,26 @@ def label_propagation_fixed(
             .select(F.col("dst").alias("id"), F.expr(_mode_expr).alias("wlbl"))
         )
         # Each generation references the previous one TWICE (the
-        # neighbor count and the carry-over side), so an unchecked
-        # lineage doubles per round (2^iters input scans — 16 at
-        # iters=3, plan-audited). Materializing the |V|-row label
-        # table per round keeps the plan linear, same pattern as the
-        # two-star generations.
-        return (
+        # neighbor count and the carry-over side), so an unstaged
+        # lineage doubles per round (2^iters input scans). Staging the
+        # |V|-row label table per round keeps the plan linear. The
+        # change count is observed below the projection, where the old
+        # and the new label are both still columns.
+        obs = Observation()
+        gen = (
             prev.join(win, "id", "left")
+            .observe(obs, F.count_if(F.col("wlbl") != F.col("lbl")).alias("changed"))
             .select("id", F.coalesce("wlbl", "lbl").alias("lbl"))
             .transform(stage_frame)
         )
+        release(prev)
+        return gen, obs.get["changed"]
 
-    if until_stable:
-        for _ in range(max_iters):
-            new = step(labels)
-            changed = (  # bounded probe: ONE integer scalar per round
-                new.withColumnRenamed("lbl", "ln")
-                .join(labels, "id")
-                .filter(F.col("ln") != F.col("lbl"))
-                .count()
-            )
-            labels = new
-            if changed == 0:
-                break
-    else:
-        for _ in range(iters):
-            labels = step(labels)
+    for _ in range(max_iters if until_stable else iters):
+        labels, changed = step(labels)
+        if until_stable and changed == 0:
+            break
+    release(und)
     return labels.select("id", F.col("lbl").cast("long").alias("community"))
 
 
@@ -574,14 +583,14 @@ def bfs_hops_fixed(
     (``least`` skips NULLs identically on both engines — an unreached
     vertex carries NULL until first touched). Fixed rounds keep the
     plan static for the SQL oracle; a production run iterates until
-    the frontier empties (the same bounded scalar probe as
-    :func:`connected_components`) and propagates only the CHANGED
-    frontier — the delta optimization every Pregel implementation
-    ships; the fixed-round form's per-round cost is one edges⋈dist
-    equi-join + one dst-keyed integer min, key-partitioned shuffles
-    only. Per-generation localCheckpoint (the parquet-staging point of
-    a cluster run) keeps the plan linear — each generation is read by
-    both the join and the carry side.
+    the frontier empties (its size observed by each generation's
+    staging job, as in :func:`connected_components`) and propagates
+    only the CHANGED frontier — the delta optimization every Pregel
+    implementation ships; the fixed-round form's per-round cost is one
+    edges⋈dist equi-join + one dst-keyed integer min, key-partitioned
+    shuffles only. Every generation is staged, which keeps the plan
+    linear (each is read by both the join and the carry side), and
+    released once its successor has materialized.
     """
     und = (
         edges.select("src", "dst")
@@ -602,11 +611,14 @@ def bfs_hops_fixed(
             .groupBy("dst")
             .agg(F.min(F.col("d") + 1).alias("nd"))
         )
-        dist = (
+        new_dist = (
             dist.join(nb.withColumnRenamed("dst", "id"), "id", "left")
             .select("id", F.least("d", "nd").alias("d"))
             .transform(stage_frame)
         )
+        release(dist)
+        dist = new_dist
+    release(und)
     return dist.select("id", F.coalesce("d", F.lit(-1)).cast("long").alias("hops"))
 
 
@@ -626,14 +638,15 @@ def kcore_fixed(
 
     ``rounds`` is FIXED so the plan is static and a SQL oracle unrolls
     it; the true fixpoint needs ≤ diameter rounds — a converged variant
-    would reuse the integer edge-count probe of
-    :func:`pagerank_fixed_point` (stop when no edge is dropped).
+    would observe the edge count in each generation's staging job, as
+    :func:`connected_components_twostar` does (stop when no edge is
+    dropped).
 
     Scale shape: per round ONE degree aggregation (key = vertex id) and
     two semi-joins filtering the edge list on its own keys — the edge
-    frame shrinks monotonically, each generation localCheckpointed (the
-    parquet-staging point of a cluster run) so the lineage stays
-    linear, exactly like the CC / LPA / PageRank iterations. Every
+    frame shrinks monotonically, and each generation is staged (and
+    the superseded one released) so the lineage stays linear, exactly
+    like the CC / LPA / PageRank iterations. Every
     quantity is an exact integer.
     """
     both = edges.select("src", "dst").union(
@@ -647,11 +660,13 @@ def kcore_fixed(
             .filter(F.col("deg") >= core_k)
             .select("src")
         )
-        und = (
+        new_und = (
             und.join(keep, "src", "semi")
             .join(keep.select(F.col("src").alias("dst")), "dst", "semi")
             .transform(stage_frame)
         )
+        release(und)
+        und = new_und
     deg_f = und.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
     return (
         vertices.join(deg_f, vertices["id"] == deg_f["src"], "left")

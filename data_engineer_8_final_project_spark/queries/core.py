@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register, tables_for
-from ..stage import stage_frame
+from ..stage import stage_frame, stage_observed
 
 # --------------------------------------------------------------------------
 # Aggregations (reference §2.4 A1/A2 generalized — TPC-H Q1 shape)
@@ -1958,12 +1958,17 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the naive ``ntile(4) OVER (ORDER BY ...)`` plans an Exchange
     SinglePartition — one task sorts every customer). Monetary rides
     as exact integer cents; the customer count enters the bucket
-    formula as one bounded scalar probe. All orders-derived, one
+    formula as a scalar observed by the job that stages the
+    per-customer aggregate. All orders-derived, one
     custkey aggregation feeding three |customers|-row rank passes."""
     from ..operators.sampling import distributed_row_number
 
     t = tables_for(spark, sf_dir)
-    base = (
+    # Staged ONCE: the three rank passes each read the per-customer
+    # aggregate twice (repartitionByRange's range-boundary sampling
+    # pass and the local-rank/offset join); unstaged, every read re-ran
+    # the orders scan + custkey aggregation (56 Exchange nodes).
+    base, seen = stage_observed(
         t["orders"]
         .groupBy("o_custkey")
         .agg(
@@ -1979,18 +1984,10 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents"),
         )
         .withColumn("neg_freq", -F.col("freq"))
-        .withColumn("neg_cents", -F.col("cents"))
-        # r16: stage the per-customer aggregate ONCE. Seven consumers
-        # re-evaluated the orders scan + custkey aggregation without it
-        # (the count probe, plus each of the three rank passes paying
-        # it twice more: repartitionByRange's range-boundary sampling
-        # pass and the local-rank/offset join re-read) — the before
-        # plan carried 56 Exchange nodes; the staged frame is read from
-        # blocks instead. At cluster scale the staging point is a
-        # parquet write — stage_frame's conf-selectable sink.
-        .transform(stage_frame)
+        .withColumn("neg_cents", -F.col("cents")),
+        F.count(F.lit(1)).alias("n"),
     )
-    n = base.count()  # bounded scalar probe: |customers|
+    n = seen["n"]  # |customers|
 
     def code(rank_col: str):
         return (
@@ -2066,7 +2063,8 @@ def q_brand_affinity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_orderkey where fan-out is bounded by brands-per-order (≤ lines
     per order, a single-digit constant) — linear in order count, never
     the unbounded wedge of a raw item-pair join; brand supports are a
-    25-row broadcast and the order total is one bounded scalar probe.
+    25-row broadcast and the order total is observed by the job that
+    stages the baskets.
     Lift = pair·total/(nₐ·n_b) as one fixed-order double chain over
     exact integer counts. Self-join sides are built from independent
     subquery aliases (the Spark 4 self-join rewrite gotcha)."""
@@ -2078,18 +2076,20 @@ def brand_affinity(lineitem: DataFrame, part: DataFrame, k: int = 15) -> DataFra
     """Shared body of ``brand_affinity_pairs`` (see its docstring) —
     takes the two frames directly so pytest can drive hand baskets.
 
-    r16 shape: ONE okey-keyed shuffle builds the per-order sorted
-    distinct brand basket (``collect_set`` dedups repeat lines in the
-    same pass that groups them — no separate ``distinct`` exchange);
-    pairs are generated INSIDE each basket row with the same
-    transform-with-index comprehension as the dedup posting lists
-    (operators/dedup._shared_shingle_pairs — A/B'd 2× over the
-    postings self-join there) instead of an okey self-join, which cost
-    two more exchanges + sorts of the staged frame. Supports and the
-    order total read the same staged baskets. Fan-out per row is
-    C(brands-per-order, 2) — bounded by the same single-digit
-    brands-per-order constant that bounded the self-join."""
-    ob = (
+    ONE okey-keyed shuffle builds the per-order sorted distinct brand
+    basket (``collect_set`` dedups repeat lines in the same pass that
+    groups them — no separate ``distinct`` exchange); pairs are
+    generated INSIDE each basket row with the same transform-with-index
+    comprehension as the dedup posting lists
+    (operators/dedup._shared_shingle_pairs, measured 2× faster than
+    the postings self-join there) instead of an okey self-join, which
+    would cost two more exchanges + sorts of the staged frame. The
+    basket frame is staged once, because supports and pair generation
+    both read it; the order total is its row count, observed by that
+    same staging job, so building the query runs no count/collect
+    job. Fan-out per row is C(brands-per-order, 2) — bounded by the
+    single-digit brands-per-order constant."""
+    ob, seen = stage_observed(
         lineitem
         .select("l_orderkey", "l_partkey")
         .join(
@@ -2098,14 +2098,10 @@ def brand_affinity(lineitem: DataFrame, part: DataFrame, k: int = 15) -> DataFra
         )
         .select(F.col("l_orderkey").alias("okey"), F.col("p_brand").alias("brand"))
         .groupBy("okey")
-        .agg(F.sort_array(F.collect_set("brand")).alias("bs"))
-        # three consumers read the basket frame (total probe, supports,
-        # pair generation) — stage the join+group once instead of
-        # re-executing it per branch (at cluster scale the staging
-        # point is a parquet write)
-        .transform(stage_frame)
+        .agg(F.sort_array(F.collect_set("brand")).alias("bs")),
+        F.count(F.lit(1)).alias("n"),
     )
-    total = ob.count()  # one row per order: the order total, no extra distinct
+    total = seen["n"]  # one row per order: the order total, no extra distinct
     sup = (
         ob.select(F.explode("bs").alias("brand"))
         .groupBy("brand")
@@ -2195,13 +2191,17 @@ def q_revenue_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue review. The global rank is the distributed two-phase rank
     (no single-task window over customers); decile totals collapse to
     10 rows before the cumulative window (tiny_global_window — a
-    metadata-sized frame by construction); the grand total enters as
-    one bounded scalar probe; every share is one double division of
-    exact integer cents."""
+    metadata-sized frame by construction); the customer count and the
+    grand total are observed by the job that stages the per-customer
+    aggregate; every share is one double division of exact integer
+    cents."""
     from ..operators.sampling import distributed_row_number, tiny_global_window
 
     t = tables_for(spark, sf_dir)
-    per_cust = (
+    # Staged once: the rank pass reads it twice (repartitionByRange
+    # samples its input, the offset join re-reads it); unstaged, each
+    # read re-ran the orders scan + aggregation (22 Exchange nodes).
+    per_cust, seen = stage_observed(
         t["orders"]
         .groupBy("o_custkey")
         .agg(
@@ -2209,15 +2209,11 @@ def q_revenue_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents")
         )
-        .withColumn("neg_cents", -F.col("cents"))
-        # r16: stage the per-customer aggregate once — the count probe,
-        # the total probe, and the rank pass (whose repartitionByRange
-        # samples its input and whose offset join re-reads it) each
-        # re-ran the orders scan + aggregation without it (22 Exchange
-        # nodes in the before plan).
-        .transform(stage_frame)
+        .withColumn("neg_cents", -F.col("cents")),
+        F.count(F.lit(1)).alias("n"),
+        F.sum("cents").cast("long").alias("total"),
     )
-    n = per_cust.count()  # bounded scalar probe: |customers|
+    n = seen["n"]  # |customers|
     ranked = distributed_row_number(
         per_cust.select("o_custkey", "cents", "neg_cents"),
         ("neg_cents", "o_custkey"),
@@ -2239,7 +2235,7 @@ def q_revenue_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("decile")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    total = per_cust.agg(F.sum("cents").cast("long")).collect()[0][0]  # scalar
+    total = seen["total"]
     return dec.select(
         "decile",
         "n_customers",

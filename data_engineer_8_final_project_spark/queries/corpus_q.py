@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..operators import sampling, text
 from ..registry import register, tables_for
-from ..stage import stage_frame
+from ..stage import stage_frame, stage_observed
 
 _DUCK_TOKENS = "string_split(trim(text), ' ')"
 #: 5-token shingles (the fixture docs are ~40 tokens; real
@@ -612,22 +612,26 @@ def q_quality_percentile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/sampling.distributed_row_number (range-partitioned
     two-phase rank — NO Exchange SinglePartition, the trap of a bare
     ``row_number() OVER (ORDER BY …)``); the corpus count enters the
-    pct formula as one bounded scalar probe. The ranked signal is
+    pct formula as a scalar observed by the job that stages the scored
+    projection. The ranked signal is
     pre-rounded to 4dp (the scoring contract), so rank order is
     engine-stable and pct is one double division of exact integers."""
     from ..operators.sampling import distributed_row_number
 
     t = tables_for(spark, sf_dir)
-    scored = t["documents"].select(
-        "doc_id",
-        F.round(
-            text.distinct_token_count("text") / text.token_count("text"), 4
-        ).alias("ttr"),
-        # r16: stage the scored projection once — the count probe plus
-        # the rank pass (range-boundary sampling + local-rank/offset
-        # join) re-ran the tokenize-and-count scan 4x unstaged.
-    ).transform(stage_frame)
-    n = scored.count()  # bounded scalar probe
+    # Staged once: the rank pass (range-boundary sampling +
+    # local-rank/offset join) re-runs the tokenize-and-count scan per
+    # read unstaged.
+    scored, seen = stage_observed(
+        t["documents"].select(
+            "doc_id",
+            F.round(
+                text.distinct_token_count("text") / text.token_count("text"), 4
+            ).alias("ttr"),
+        ),
+        F.count(F.lit(1)).alias("n"),
+    )
+    n = seen["n"]
     return (
         distributed_row_number(scored, ("ttr", "doc_id"), "rnk")
         .select(

@@ -127,6 +127,20 @@ def test_connected_components_rejects_degenerate_max_iters(spark):
         clusters.connected_components(verts, edges, max_iters=0)
 
 
+def test_connected_components_stops_after_max_iters_rounds(spark):
+    """On the path 0-1-2-3, round k labels each vertex with the min id
+    within k hops; a cap of 1 or 2 rounds returns exactly those labels."""
+    from pyspark.sql import functions as F
+
+    from data_engineer_8_final_project_spark.operators import clusters
+
+    verts = spark.range(4).select(F.col("id").alias("doc_id"))
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "doc_a long, doc_b long")
+    for max_iters, want in ((1, [0, 0, 1, 2]), (2, [0, 0, 0, 1]), (3, [0, 0, 0, 0])):
+        got = clusters.connected_components(verts, edges, max_iters=max_iters).collect()
+        assert [r.cluster_id for r in sorted(got)] == want, max_iters
+
+
 def test_twostar_matches_minlabel_on_mixed_graph(spark):
     """Both iterations reach the same unique fixpoint on a graph mixing
     cliques, a chain, and singletons."""
@@ -928,12 +942,9 @@ def test_rfm_segments_partition_and_quartile_invariants(spark, sf_dir):
     assert sorted(map(tuple, again)) == sorted(map(tuple, out))
 
 
-def test_brand_affinity_hand_baskets(spark):
-    """Hand baskets: {A,B}, {A,B}, {A,C} → pair (A,B) count 2 with
-    lift 3·2/(3·2)=1.0, (A,C) count 1 with lift 3·1/(3·1)=1.0; repeat
-    lines of one brand in an order must count once."""
-    from data_engineer_8_final_project_spark.queries.core import brand_affinity
-
+def _hand_baskets(spark):
+    """(lineitem, part) for baskets {A,B}, {A,B}, {A,C}; order 1 holds
+    brand A twice (parts 10 and 11)."""
     li_rows = [
         (1, 10), (1, 11), (1, 20),   # order 1: A (twice via 10,11), B
         (2, 10), (2, 20),            # order 2: A, B
@@ -950,11 +961,57 @@ def test_brand_affinity_hand_baskets(spark):
         [(10, "A"), (11, "A"), (20, "B"), (30, "C")],
         "p_partkey long, p_brand string",
     )
+    return lineitem, part
+
+
+def test_brand_affinity_hand_baskets(spark):
+    """Hand baskets: {A,B}, {A,B}, {A,C} → pair (A,B) count 2 with
+    lift 3·2/(3·2)=1.0, (A,C) count 1 with lift 3·1/(3·1)=1.0; repeat
+    lines of one brand in an order must count once."""
+    from data_engineer_8_final_project_spark.queries.core import brand_affinity
+
+    lineitem, part = _hand_baskets(spark)
     out = {(r.brand_a, r.brand_b): r for r in brand_affinity(lineitem, part).collect()}
     assert set(out) == {("A", "B"), ("A", "C")}
     ab, ac = out[("A", "B")], out[("A", "C")]
     assert (ab.n_pair, ab.n_a, ab.n_b, ab.lift) == (2, 3, 2, 1.0)
     assert (ac.n_pair, ac.n_a, ac.n_b, ac.lift) == (1, 3, 1, 1.0)
+
+
+def _group_callsites(spark, group: str, build) -> list[str]:
+    """Callsites of every job ``build()`` runs, read from Spark's status
+    store through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    return [store.job(j).name() for j in sc.statusTracker().getJobIdsForGroup(group)]
+
+
+def test_cc_and_brand_affinity_build_runs_no_probe_jobs(spark):
+    """Building connected_components and brand_affinity runs only
+    staging jobs: the edge count, the per-round convergence sums and
+    the order total are observed by those jobs, not probed by a
+    separate count/collect."""
+    from data_engineer_8_final_project_spark.operators import clusters
+    from data_engineer_8_final_project_spark.queries.core import brand_affinity
+
+    pairs = [(1, 2), (2, 3), (10, 11), (11, 12), (12, 13), (20, 21)]
+    verts = spark.createDataFrame([(i,) for i in range(1, 25)], "doc_id long")
+    edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    lineitem, part = _hand_baskets(spark)
+    for group, build in (
+        ("gate:cc", lambda: clusters.connected_components(verts, edges)),
+        ("gate:brand_affinity", lambda: brand_affinity(lineitem, part)),
+    ):
+        sites = _group_callsites(spark, group, build)
+        assert sites, f"{group}: no staging job recorded"
+        probes = [s for s in sites if s.startswith(("collect", "count"))]
+        assert not probes, f"{group}: probe jobs {probes}"
 
 
 def test_conversion_latency_hand_cases(spark, monkeypatch, tmp_path):
