@@ -23,11 +23,11 @@ standings ids are safe (club is unique per league).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import staging
 from ..operators.cleaning import clean_matches, league_standings
 from ..registry import register, tables_for
 from ..sources import html
@@ -145,14 +145,12 @@ cleaned AS (
 )
 def q_html_matches_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Render → save → spark.read.text-parse round trip of the scrape
-    source. The fixture lands in a per-SF scratch dir (overwritten each
-    run — content is deterministic, only the parse output is graded)."""
+    source. The pages land in this process's scratch dir for the SF,
+    reaped at exit (overwritten each run — content is deterministic,
+    only the parse output is graded)."""
     t = tables_for(spark, sf_dir)
     raw = synth_matches_raw(t["lineitem"])
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_html_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = staging.scratch_dir("html", os.path.abspath(sf_dir))
     html.write_html_fixture(raw, path)
     return html.read_html_matches(spark, path).orderBy(
         "date", "home_team", "score", "away_team", "league"

@@ -11,7 +11,6 @@ connected-components clustering, replayed in SQL with a recursive CTE.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -21,10 +20,6 @@ from ..operators import clusters, dedup, sampling, text
 from ..registry import register, tables_for
 from ..streaming import events as ev
 from ..stage import stage_frame
-
-#: docs-stream stage dirs already scheduled for atexit removal (one
-#: registration per (process, stage); the dirs are pid-scoped).
-_DOC_STREAM_STAGES: set[str] = set()
 
 _DUCK_TOKENS = "string_split(trim(text), ' ')"
 
@@ -345,24 +340,12 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..schemas import FIXTURE_SCHEMAS
 
-    import atexit
-    import shutil
-
     t = tables_for(spark, sf_dir)
-    # pid-scoped: two processes running this query concurrently (e.g.
-    # the parity suite alongside a driver emulation) must not overwrite
-    # each other's replay source mid-stream. Pid-scoping leaks the dir
-    # if this process dies before atexit — sweep day-old orphans of
-    # the family on entry (VERDICT r8 item 7).
-    staging.sweep_stale_stage_dirs("spark_graft_docs_stream_")
-    chunked = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_docs_stream_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
+    chunked, _ = staging.stage_replay(
+        "docs_stream",
+        os.path.join(sf_dir, "documents.parquet"),
+        lambda: [t["documents"].repartition(4)],
     )
-    if chunked not in _DOC_STREAM_STAGES:
-        _DOC_STREAM_STAGES.add(chunked)
-        atexit.register(shutil.rmtree, chunked, ignore_errors=True)
-    t["documents"].repartition(4).write.mode("overwrite").parquet(chunked)
     doc_stream = (
         spark.readStream.schema(FIXTURE_SCHEMAS["documents"])
         .option("maxFilesPerTrigger", 1)
@@ -371,7 +354,7 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = doc_stream.select(text.fingerprint("text").alias("fp")).dropDuplicates(["fp"])
     # spilled drain: output is one row per DISTINCT key, which scales
     # with the corpus — same driver-heap liability class as
-    # dedup_stream_watermarked (r12: 128x memory-sink OOM)
+    # dedup_stream_watermarked
     return ev.run_available_now_spilled(deduped).orderBy("fp")
 
 

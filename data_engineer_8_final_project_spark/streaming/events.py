@@ -28,7 +28,9 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import staging
 from ..schemas import EVENT_PROPS, EVENTS
+from ..stage import stage_frame
 
 _sink_ids = itertools.count()
 
@@ -143,6 +145,36 @@ def sliding_window_agg(events: DataFrame) -> DataFrame:
 EOS_EVENT_TYPE = "__eos__"
 
 
+def _eos_sentinel(spark: SparkSession, hi_us: int) -> DataFrame:
+    """One-file chunk holding the end-of-stream row, 10 days past
+    ``hi_us`` (epoch µs), under the reserved ids -1."""
+    import datetime as dt
+
+    # naive local time: createDataFrame maps it back to exactly hi_us
+    hi = dt.datetime.fromtimestamp(hi_us // 10**6).replace(microsecond=hi_us % 10**6)
+    row = (-1, hi + dt.timedelta(days=10), -1, EOS_EVENT_TYPE, 0.0, "{}")
+    return spark.createDataFrame([row], EVENTS).coalesce(1)
+
+
+def us_bounds(batch: DataFrame) -> tuple[int, int]:
+    """(min, max) event time of ``batch`` in epoch µs: one bounded collect."""
+    us = F.unix_micros("ts")
+    return tuple(batch.agg(F.min(us), F.max(us)).collect()[0])
+
+
+def time_slices(batch: DataFrame, n: int, lo_us: int, hi_us: int) -> list[DataFrame]:
+    """``batch`` cut into ``n`` disjoint time-ascending one-file chunks.
+
+    Cuts are integer epoch-µs ``lo + i*span//n``; the last chunk runs to
+    the max, so every row lands in exactly one chunk and a consumer can
+    reason about batch contents exactly.
+    """
+    us = F.unix_micros("ts")
+    cuts = [lo_us + i * (hi_us - lo_us) // n for i in range(n)]
+    conds = [(us >= a) & (us < b) for a, b in zip(cuts, cuts[1:])] + [us >= cuts[-1]]
+    return [batch.filter(c).coalesce(1) for c in conds]
+
+
 def session_window_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Native gap-based session windows per user (F.session_window).
 
@@ -192,78 +224,30 @@ def session_window_stream(
     user_id=-1 key, and is dropped from the bounded sink output;
     availableNow's final no-data micro-batch then flushes every session.
     """
-    import datetime as dt
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..catalog import _assert_events_ts_format
 
     src = os.path.join(sf_dir, "events.parquet")
     _assert_events_ts_format(src)
-    # Stage-dir key = fingerprint of the ABSOLUTE source path + its
-    # stat (mtime, size): two sf dirs sharing a basename get distinct
-    # stages, and a changed fixture at the same path restages instead
-    # of silently reusing stale data.
-    # _STAGE_FORMAT bumps force a restage when the staging CODE changes
-    # (v2: ts staged as TIMESTAMP(µs), not INT64-nanos) — without it a
-    # stale /tmp stage written by older code would be silently replayed.
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"v2:{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:{n_chunks}".encode()
-    ).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"spark_graft_events_eos_{key}")
-    done_marker = os.path.join(stage, "_staged_ok")
-    if not os.path.exists(done_marker):
-        batch = spark.read.schema(EVENTS).parquet(src)
-        lo, hi = batch.agg(F.min("ts"), F.max("ts")).collect()[0]  # bounded: two scalars
-        # Replay order must be (roughly) event-time order: the file source
-        # feeds micro-batches in mtime order, and once the watermark
-        # advances past a later batch's data those rows are dropped as
-        # late. Cut the fixture into disjoint ascending time ranges and
-        # write them sequentially, then pin EXPLICIT strictly-increasing
-        # mtimes on the staged part files (os.utime): on filesystems
-        # with coarse mtime granularity two sequential writes can tie,
-        # and the source's tiebreak over random part-file names could
-        # replay a later chunk first, dropping the earlier one as late.
-        # Staging is input prep (deterministic from the fixture), done
-        # once per fixture content and reused across runs.
-        shutil.rmtree(stage, ignore_errors=True)
-        # n_chunks ascending time slices + the sentinel file; the
-        # default 2 keeps the replay bit-identical to the pre-r14
-        # staging, and the A/B harness raises it to measure the
-        # batch-count cost law on this JVM-side consumer
-        cuts = [lo + (hi - lo) * i // n_chunks for i in range(n_chunks + 1)]
-        cuts[-1] = hi + dt.timedelta(microseconds=1)
-        from .. import staging
 
-        staged_so_far: set[str] = set()
-        for i in range(n_chunks):
-            batch.filter((F.col("ts") >= cuts[i]) & (F.col("ts") < cuts[i + 1])).coalesce(
-                1
-            ).write.mode("append").parquet(stage)
-            # whole seconds: coarse-fs safe
-            staging.pin_new_file_mtimes(stage, st.st_mtime + 1 + i, staged_so_far)
-        sentinel = spark.createDataFrame(
-            [(-1, hi + dt.timedelta(days=10), -1, EOS_EVENT_TYPE, 0.0, "{}")],
-            EVENTS,
-        )
-        sentinel.coalesce(1).write.mode("append").parquet(stage)
-        staging.pin_new_file_mtimes(stage, st.st_mtime + 1 + n_chunks, staged_so_far)
-        open(done_marker, "w").close()
+    def build() -> list[DataFrame]:
+        # Replay order must follow event time: once the watermark passes
+        # a later chunk's rows they are dropped as late.
+        batch = spark.read.schema(EVENTS).parquet(src)
+        lo_us, hi_us = us_bounds(batch)
+        return time_slices(batch, n_chunks, lo_us, hi_us) + [_eos_sentinel(spark, hi_us)]
+
+    stage, _ = staging.stage_replay("events_eos", src, build, n_chunks)
     events = (
         spark.readStream.schema(EVENTS)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
         .withWatermark("ts", "0 seconds")
     )
-    # Per-user session state scales with the keyspace: replicated
-    # corpora multiply state rows, and the fixed width-8 that is right
-    # at sf0.1 serializes per-store work at scale — measured 563 s at
-    # 128x (10.5x wall for 2x data over 64x) before this sizing, r11.
-    # spilled drain: one output row per SESSION — corpus-scaling (r12
-    # memory-sink liability sweep)
+    # Per-user session state scales with the keyspace, so the state
+    # width follows source volume (state_width_for). Spilled drain: one
+    # output row per SESSION, which scales with the corpus.
     out = run_available_now_spilled(
         session_window_agg(events, gap),
         state_partitions=state_width_for(src),
@@ -371,16 +355,15 @@ def run_available_now(
     # copy the sink out (lineage-free) and drop the memory table — each
     # sink holds its full result in executor memory, and leaving every
     # run's table registered leaks storage across a long session
-    out = spark.table(name).localCheckpoint(eager=True)
+    out = stage_frame(spark.table(name))
     spark.catalog.dropTempView(name)
     return out
 
 
 def _drive_available_now(spark, start, state_partitions, progress_out) -> None:
-    """Shared drive scaffolding for both drains (review r12: the two
-    siblings duplicated it verbatim and had already drifted): pin the
-    state-shuffle width, start via ``start()``, drain to completion,
-    surface StreamingQueryProgress, restore the session conf."""
+    """Drive scaffolding shared by both drains: pin the state-shuffle
+    width, start via ``start()``, drain to completion, surface
+    StreamingQueryProgress, restore the session conf."""
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
     if state_partitions:
@@ -407,29 +390,25 @@ def run_available_now_spilled(
 
     The memory sink holds every emitted row on the driver heap, which
     is right for bounded aggregates but caps row-per-input drains at
-    roughly the heap size (r12 finding: the 128x dedup_stream_
-    watermarked leg emitted ~14M rows and OOMed the 8g driver). This
-    variant lands each micro-batch in a temp parquet sink via
-    foreachBatch (``_epoch``-partitioned dynamic overwrite — the
-    exactly-once pattern of :func:`stream_to_parquet_exactly_once`) and
-    returns the batch read-back: emitted rows never accumulate in one
-    JVM, which is also the only shape that works on a real cluster.
-    Append and update modes both land each batch's emitted rows once —
-    the same multiset the memory sink would hold (the memory sink also
-    APPENDS update-mode emissions, it does not compact them).
+    roughly the heap size. This variant lands each micro-batch in a
+    temp parquet sink via foreachBatch (``_epoch``-partitioned dynamic
+    overwrite — the exactly-once pattern of
+    :func:`stream_to_parquet_exactly_once`) and returns the batch
+    read-back: emitted rows never accumulate in one JVM, which is also
+    the only shape that works on a real cluster. Append and update
+    modes both land each batch's emitted rows once — the same multiset
+    the memory sink would hold (the memory sink also APPENDS
+    update-mode emissions, it does not compact them).
 
-    The spill root is reclaimed EAGERLY: the read-back is
-    ``localCheckpoint(eager=True)``-ed (lineage-free, block-manager
-    storage with disk spill — the same shape the memory-sink twin
-    returns) and the temp dir is removed before returning, so a long
-    bench/scale session running many corpus-scaling drains does not
-    accumulate gigabytes under /tmp (ADVICE r12 #1 — the disk analogue
-    of the driver-heap leak this drain exists to avoid). Dead
-    checkpoint blocks are reaped by the long-lived harnesses that
-    interleave many drains in one JVM — scale_curve per rep, bench.py
-    between passes (ADVICE r13 #2); one-shot consumers (the grading
-    driver, pytest) hold at most one drain's blocks, bounded by the
-    emitted-row set, until session exit.
+    The spill root is reclaimed EAGERLY: the read-back goes through
+    :func:`stage.stage_frame` (lineage-free, on the session's staging
+    sink, like the memory-sink twin's copy-out) and the root is removed
+    before returning, so a long session running many corpus-scaling
+    drains does not accumulate spill under $TMPDIR. A killed run leaves
+    its root behind; entry sweeps day-old roots. Dead staged frames are
+    reaped by the long-lived harnesses that interleave many drains in
+    one JVM (bench.py between passes); a one-shot consumer holds at most
+    one drain's staged rows until session exit.
     """
     import glob as _glob
     import os
@@ -437,6 +416,7 @@ def run_available_now_spilled(
     import tempfile
 
     spark = stream_df.sparkSession
+    staging.sweep_stale_stage_dirs("spark_graft_drain_")
     root = tempfile.mkdtemp(prefix="spark_graft_drain_")
     out_dir = os.path.join(root, "out")
     schema = stream_df.schema  # captured for the zero-row read-back
@@ -467,10 +447,10 @@ def run_available_now_spilled(
         # batch writes only _SUCCESS) and a bare read would raise
         # 'Unable to infer schema'; return an empty frame with the
         # stream's schema instead, matching the memory sink's graceful
-        # empty result (review r12).
+        # empty result.
         if not _glob.glob(os.path.join(out_dir, "_epoch=*", "*.parquet")):
             return spark.createDataFrame([], schema)
-        return spark.read.parquet(out_dir).drop("_epoch").localCheckpoint(eager=True)
+        return stage_frame(spark.read.parquet(out_dir).drop("_epoch"))
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -512,64 +492,29 @@ def stream_to_parquet_exactly_once(
     q.awaitTermination()
 
 
-#: time-ordered stage dirs already scheduled for atexit removal.
-_TORDER_STAGES: set[str] = set()
-
-
 def _stage_time_ordered_replay(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
     """Stage the events fixture as ``n_chunks`` time-ASCENDING
-    micro-batches with pinned increasing mtimes.
+    micro-batches (:func:`time_slices`).
 
     Replay arrival order then mirrors event time — the realistic
-    production arrival shape — so watermarked consumers don't drop most
-    rows as late when the raw source is a randomly-split directory
-    (r12 review finding: the scale harness's 32 random parts advanced
-    the stream-stream join's watermark near the horizon after one file
-    and the 64x/128x legs measured mostly the late-drop path; a
-    time-split replay has zero drops because a chunk boundary orders
-    both join sides together). Cuts are integer epoch-us slices
-    ``lo + k*span//n`` — deterministic for any consumer that wants to
-    reason about batch contents.
+    production arrival shape — so watermarked consumers drop nothing as
+    late even when the raw source is a randomly-split directory: a
+    chunk boundary orders both sides of a stream-stream join together,
+    where random parts would advance the watermark near the horizon
+    after one file.
     """
-    import atexit
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
-    from .. import staging
     from ..catalog import _assert_events_ts_format
 
     src = os.path.join(sf_dir, "events.parquet")
     _assert_events_ts_format(src)
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"torder-v1:{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:{n_chunks}:{os.getpid()}".encode()
-    ).hexdigest()[:12]
-    staging.sweep_stale_stage_dirs("spark_graft_torder_")
-    stage = os.path.join(tempfile.gettempdir(), f"spark_graft_torder_{key}")
-    done = os.path.join(stage, "_staged_ok")
-    if stage not in _TORDER_STAGES:
-        _TORDER_STAGES.add(stage)
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    if not os.path.exists(done):
+
+    def build() -> list[DataFrame]:
         batch = spark.read.schema(EVENTS).parquet(src)
-        lo_us, hi_us = batch.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).collect()[0]  # bounded: two scalars
-        span = hi_us - lo_us
-        us = F.unix_micros(F.col("ts"))
-        shutil.rmtree(stage, ignore_errors=True)
-        staged: set[str] = set()
-        for i in range(n_chunks):
-            lo_cut = lo_us + i * span // n_chunks
-            hi_cut = lo_us + (i + 1) * span // n_chunks
-            cond = (us >= lo_cut) & (us < hi_cut) if i < n_chunks - 1 else (us >= lo_cut)
-            batch.filter(cond).coalesce(1).write.mode("append").parquet(stage)
-            # whole seconds: coarse-fs safe
-            staging.pin_new_file_mtimes(stage, st.st_mtime + 1 + i, staged)
-        open(done, "w").close()
-    return stage
+        return time_slices(batch, n_chunks, *us_bounds(batch))
+
+    return staging.stage_replay("torder", src, build, n_chunks)[0]
 
 
 def view_click_stream_join(
@@ -590,8 +535,7 @@ def view_click_stream_join(
     a randomly-split multi-part source (the scale harness's shape)
     advances the watermark near the horizon after one file and the
     join silently drops most rows as late — a plausible-but-partial
-    result, worse than the zero-row symptom the r12 directory fix
-    caught. Time-ascending chunks drop nothing (a chunk boundary
+    result, worse than a zero-row replay. Time-ascending chunks drop nothing (a chunk boundary
     orders both sides together), so the drained result equals the
     batch join at every replica shape.
     """
@@ -649,19 +593,13 @@ def segment_enriched_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
     )
     # read_events_stream handles directory-shaped events sources (a raw
-    # pathGlobFilter reader silently replays zero rows there — the r11
-    # session-stream finding, swept to every event-stream site in r12)
+    # pathGlobFilter reader silently replays zero rows there)
     enriched = read_events_stream(spark, sf_dir).join(segments, "user_id")
     agg = enriched.groupBy("c_mktsegment", "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
     )
     return run_available_now(agg, output_mode="complete")
-
-
-#: wmdrop stage dirs already scheduled for atexit removal (one
-#: registration per (process, stage); the dirs are pid-scoped).
-_WMDROP_STAGES: set[str] = set()
 
 
 def _stage_wmdrop_replay(spark: SparkSession, sf_dir: str) -> str:
@@ -683,41 +621,24 @@ def _stage_wmdrop_replay(spark: SparkSession, sf_dir: str) -> str:
     (``lo + (hi - lo) // k``) so the DuckDB oracle replays the planted
     set bit-exactly with ``epoch_us`` + integer division.
     """
-    import atexit
-    import datetime as dt
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
-    from .. import staging
     from ..catalog import _assert_events_ts_format
 
     src = os.path.join(sf_dir, "events.parquet")
     _assert_events_ts_format(src)
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"wmdrop-v1:{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:{os.getpid()}".encode()
-    ).hexdigest()[:12]
-    staging.sweep_stale_stage_dirs("spark_graft_wmdrop_")
-    stage = os.path.join(tempfile.gettempdir(), f"spark_graft_wmdrop_{key}")
-    done = os.path.join(stage, "_staged_ok")
-    if stage not in _WMDROP_STAGES:
-        _WMDROP_STAGES.add(stage)
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    if not os.path.exists(done):
+
+    def build() -> list[DataFrame]:
         batch = spark.read.schema(EVENTS).parquet(src)
-        lo_us, hi_us = batch.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).collect()[0]  # bounded: two scalars
+        lo_us, hi_us = us_bounds(batch)
         mid_us = lo_us + (hi_us - lo_us) // 2
         eighth_us = lo_us + (hi_us - lo_us) // 8
-        # Precondition (ADVICE r11): every planted copy (first eighth)
-        # must be DROPPABLE — its hour window has to end at least
-        # ``delay`` before the watermark high-point, with one extra
-        # window of margin. On a short-span fixture some copies would
-        # silently survive and the query would fail its oracle with an
-        # unexplained hash mismatch instead of this error.
+        # Every planted copy (first eighth) must be DROPPABLE: its hour
+        # window has to end at least ``delay`` before the watermark
+        # high-point, with one extra window of margin. On a short-span
+        # fixture some copies would silently survive and the query would
+        # fail its oracle with an unexplained hash mismatch instead of
+        # this error.
         delay_us = 3_600_000_000  # watermark_drop_audit's "1 hour" default
         window_us = 3_600_000_000
         eighth_window_end = ((eighth_us + window_us - 1) // window_us) * window_us
@@ -729,27 +650,15 @@ def _stage_wmdrop_replay(spark: SparkSession, sf_dir: str) -> str:
                 "(roughly a >=2.5h span) so every planted copy is behind "
                 "the watermark; use a longer-span fixture"
             )
-        shutil.rmtree(stage, ignore_errors=True)
         us = F.unix_micros(F.col("ts"))
         chunks = [
             batch.filter(us < mid_us),
             batch.filter(us >= mid_us),
             batch.filter(us < eighth_us),  # planted late replays
         ]
-        staged: set[str] = set()
-        for i, chunk in enumerate(chunks):
-            chunk.coalesce(1).write.mode("append").parquet(stage)
-            # whole seconds: coarse-fs safe
-            staging.pin_new_file_mtimes(stage, st.st_mtime + 1 + i, staged)
-        hi = dt.datetime.fromtimestamp(hi_us / 1e6, dt.timezone.utc).replace(tzinfo=None)
-        sentinel = spark.createDataFrame(
-            [(-1, hi + dt.timedelta(days=10), -1, EOS_EVENT_TYPE, 0.0, "{}")],
-            EVENTS,
-        )
-        sentinel.coalesce(1).write.mode("append").parquet(stage)
-        staging.pin_new_file_mtimes(stage, st.st_mtime + 4, staged)
-        open(done, "w").close()
-    return stage
+        return [c.coalesce(1) for c in chunks] + [_eos_sentinel(spark, hi_us)]
+
+    return staging.stage_replay("wmdrop", src, build)[0]
 
 
 def watermark_drop_audit(
@@ -816,10 +725,6 @@ def watermark_drop_audit(
     )
 
 
-#: wmdedup stage dirs already scheduled for atexit removal.
-_WMDEDUP_STAGES: set[str] = set()
-
-
 def _stage_wmdedup_replay(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """Stage the events fixture as a duplicate-delivery replay for
     ``dropDuplicatesWithinWatermark``. Returns ``(stage_dir, delay_us)``.
@@ -855,29 +760,14 @@ def _stage_wmdedup_replay(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     same batch as its eviction is still suppressed — batches 3/4 are
     therefore separate).
     """
-    import atexit
-    import hashlib
-    import json
     import os
-    import shutil
-    import tempfile
 
-    from .. import staging
     from ..catalog import _assert_events_ts_format
 
     src = os.path.join(sf_dir, "events.parquet")
     _assert_events_ts_format(src)
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"wmdedup-v2:{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:{os.getpid()}".encode()
-    ).hexdigest()[:12]
-    staging.sweep_stale_stage_dirs("spark_graft_wmdedup_")
-    stage = os.path.join(tempfile.gettempdir(), f"spark_graft_wmdedup_{key}")
-    done = os.path.join(stage, "_staged_ok")
-    if stage not in _WMDEDUP_STAGES:
-        _WMDEDUP_STAGES.add(stage)
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    if not os.path.exists(done):
+
+    def build() -> tuple[list[DataFrame], dict]:
         batch = spark.read.schema(EVENTS).parquet(src)
         lo_us, hi_us, n_rows, n_keys = batch.agg(
             F.min(F.unix_micros("ts")),
@@ -914,16 +804,10 @@ def _stage_wmdedup_replay(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
             batch.filter((us >= lo_us + 2 * span // 8) & (us < lo_us + 3 * span // 8)),
             shifted(us < lo_us + span // 8, 7 * span // 8),
         ]
-        shutil.rmtree(stage, ignore_errors=True)
-        staged: set[str] = set()
-        for i, chunk in enumerate(chunks):
-            chunk.coalesce(1).write.mode("append").parquet(stage)
-            # whole seconds: coarse-fs safe
-            staging.pin_new_file_mtimes(stage, st.st_mtime + 1 + i, staged)
-        with open(done, "w") as f:
-            json.dump({"delay_us": span // 4}, f)
-    with open(done) as f:
-        return stage, json.load(f)["delay_us"]
+        return [c.coalesce(1) for c in chunks], {"delay_us": span // 4}
+
+    stage, meta = staging.stage_replay("wmdedup", src, build)
+    return stage, meta["delay_us"]
 
 
 def dedup_stream_watermarked(

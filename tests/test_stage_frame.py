@@ -141,3 +141,30 @@ def test_lpa_until_stable_stops_on_unchanged_round(spark, monkeypatch):
     out = clusters.label_propagation_fixed(verts, edges, until_stable=True, max_iters=50)
     assert {r.id: r.community for r in out.collect()} == {0: 0, 1: 0, 2: 0}
     assert len(staged) == 1 + 3
+
+
+def test_stream_drains_hash_identical_under_both_sinks(spark, sf_dir, tmp_path):
+    """Both drains copy their sink out through stage_frame, so the
+    staging sink governs them: a memory-sink drain (events_hourly_stream)
+    and a spilled drain (user_totals_stateful) return the same rows
+    under either sink."""
+    from data_engineer_8_final_project_spark.registry import all_queries
+
+    queries = all_queries()
+
+    def rows() -> dict[str, list[str]]:
+        return {
+            name: sorted(map(repr, queries[name].fn(spark, sf_dir).collect()))
+            for name in ("events_hourly_stream", "user_totals_stateful")
+        }
+
+    want = rows()
+    spark.conf.set(stage.SINK_CONF, "parquet")
+    spark.conf.set(stage.DIR_CONF, str(tmp_path))
+    try:
+        got = rows()
+        assert len(_stage_dirs(tmp_path)) >= 2, "drains must stage through the parquet sink"
+    finally:
+        spark.conf.unset(stage.SINK_CONF)
+        spark.conf.unset(stage.DIR_CONF)
+    assert all(want.values()) and got == want

@@ -1,9 +1,11 @@
-"""Stage-dir hygiene (VERDICT r8 item 7): a crashed pid's orphaned
-pid-scoped stage dir must be reaped by the NEXT process's entry sweep,
-while live (recent) stages are never touched."""
+"""Replay-dir staging: the ``stage_replay`` protocol and stage-dir
+hygiene. A crashed pid's orphaned pid-scoped stage dir must be reaped
+by the NEXT process's entry sweep, while live (recent) stages are never
+touched."""
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 
@@ -47,8 +49,46 @@ def test_sweep_ignores_files_and_missing_root(monkeypatch, tmp_path):
     staging.sweep_stale_stage_dirs("spark_graft_funnel_")  # must not raise
 
 
+def test_stage_replay_writes_pins_reuses_and_sweeps(spark, monkeypatch, tmp_path):
+    monkeypatch.setattr(staging.tempfile, "gettempdir", lambda: str(tmp_path))
+    src = tmp_path / "fixture.bin"
+    src.write_text("x")
+    stale = _make_stage(str(tmp_path), "spark_graft_unit_1_deadbeef0000", 2 * 86400)
+    fresh = _make_stage(str(tmp_path), "spark_graft_unit_2_livelive0000", 60)
+    calls = []
+
+    def build():
+        calls.append(1)
+        chunks = [spark.range(10 * i, 10 * i + 10).coalesce(1) for i in range(3)]
+        return chunks, {"delay_us": 7}
+
+    stage, meta = staging.stage_replay("unit", str(src), build, 3)
+    assert calls == [1] and meta == {"delay_us": 7}
+    name = os.path.basename(stage)
+    assert name.startswith(f"spark_graft_unit_{os.getpid()}_"), name
+    assert stage in staging._allocated, "the dir must be reaped at exit"
+    assert not os.path.exists(stale), "day-old sibling must be swept"
+    assert os.path.exists(fresh), "recent sibling must survive"
+
+    files = sorted(glob.glob(os.path.join(stage, "*.parquet")), key=os.path.getmtime)
+    assert len(files) == 3, "one parquet file per chunk"
+    mtimes = [os.path.getmtime(f) for f in files]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+    for i, f in enumerate(files):
+        ids = sorted(r.id for r in spark.read.parquet(f).collect())
+        assert ids == list(range(10 * i, 10 * i + 10)), "chunk i replays i-th"
+
+    assert staging.stage_replay("unit", str(src), build, 3) == (stage, meta)
+    assert calls == [1], "a finished dir is reused without running build"
+
+    other, other_meta = staging.stage_replay(
+        "unit", str(src), lambda: [spark.range(2).coalesce(1)], 4
+    )
+    assert other != stage and other_meta == {}, "key parts select the dir"
+
+
 def test_wmdrop_stager_rejects_short_span_fixture(spark, tmp_path):
-    """ADVICE r11 #2: on a fixture whose time span cannot put every
+    """On a fixture whose time span cannot put every
     planted copy behind the watermark (~under 2.5h for the 1h delay +
     1h window), staging must fail loudly with the span requirement —
     not let the query die later as an unexplained oracle mismatch."""

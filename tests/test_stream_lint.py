@@ -3,7 +3,7 @@ item 4: "when a defect is found in a pattern, grep for the pattern,
 not just the site").
 
 Three patterns, each of which shipped (or nearly shipped) a production
-defect found only by a scale leg:
+defect found only by a scale leg, plus a fourth that leaked:
 
 1. raw ``pathGlobFilter`` stream readers outside ``read_events_stream``
    silently replay ZERO rows on directory-shaped sources (r11 session
@@ -14,6 +14,9 @@ defect found only by a scale leg:
 3. ``applyInPandas*`` / ``mapInPandas`` sites that ship unconsumed
    columns across the Arrow boundary pay measured 15-25%% penalties
    (r12: projecting cut user_totals_stateful 381.7 -> 323.8 s at 64x).
+4. Hand-copied ``$TMPDIR`` scratch-dir protocols (dir naming, atexit
+   reap, day-old sweep, ``_staged_ok`` reuse marker) drift, and the
+   copies that skipped part of the protocol leaked and raced.
 
 These are ALLOWLIST tests, not bans: every existing site was
 adjudicated in the r13 sweep (SURVEY §13); a NEW site fails here until
@@ -155,4 +158,20 @@ def test_arrow_boundary_sites_project_consumed_columns():
         f"Arrow-boundary site set changed: {got ^ allowed}. New sites "
         "must project consumed columns before the exchange; adjudicate "
         "and update the allowlist."
+    )
+
+
+def test_scratch_dir_protocol_stays_in_staging():
+    """Pattern 4: ``$TMPDIR`` dirs, atexit reaps and the ``_staged_ok``
+    reuse marker live in ``staging.py`` (replay and scratch dirs) and
+    ``stage.py`` (parquet staging sink). The one other site is the
+    drain's spill root, removed before ``run_available_now_spilled``
+    returns."""
+    pattern = r"\batexit\b|tempfile\.(gettempdir|mkdtemp)\b|_staged_ok|_[A-Z]+_STAGES\b"
+    allowed = {("streaming/events.py", "run_available_now_spilled")}
+    got = {site for site in _sites(pattern) if site[0] not in ("staging.py", "stage.py")}
+    assert got == allowed, (
+        f"scratch-dir protocol site set changed: {got ^ allowed}. Allocate "
+        "replay dirs with staging.stage_replay and other per-process scratch "
+        "dirs with staging.scratch_dir, which name, sweep and reap them."
     )
